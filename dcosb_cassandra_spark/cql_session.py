@@ -2283,25 +2283,21 @@ class CqlSession:
             )
         if which == "caches":
             # [PK `db/virtual/CachesTable.java`] — here the genuinely
-            # informative process caches are the memoized ARTIFACT
-            # registries (codebook, RAM-resident IVF index, kNN graph,
-            # quality model, BPE merges…): entry counts read live
-            from .operators import llm_quality as _q
-            from .operators import llm_similarity as _sim
-            from .operators import llm_text as _t
+            # informative process caches are the per-corpus artifact
+            # memos (codebook, RAM-resident IVF index, kNN graph, quality
+            # model, BPE merges…): every registered Memo, read live
+            from .memo import MEMOS
+            from .registry import load_all
 
-            regs = {
-                "bpe_merges": _t._BPE_TRAIN_CACHE,
-                "codebook": _sim._CODEBOOK_CACHE,
-                "ivf_index_dirs": _sim._IVF_INDEX_CACHE,
-                "ivf_index_ram": _sim._IVF_INDEX_DF_CACHE,
-                "knn_graph": _sim._KNN_GRAPH_CACHE,
-                "quality_model": _q._QC_CACHE,
-                "query_batch": _sim._QUERY_BATCH_CACHE,
-            }
-            rows = [(n, len(d)) for n, d in sorted(regs.items())]
+            load_all()  # every operator module's memos are registered
+            rows = [
+                (m.name, len(m), m.cap, m.hit_count, m.request_count)
+                for m in sorted(MEMOS, key=lambda m: m.name)
+            ]
             return self.spark.createDataFrame(
-                rows, "name STRING, entry_count BIGINT"
+                rows,
+                "name STRING, entry_count BIGINT, capacity BIGINT, "
+                "hit_count BIGINT, request_count BIGINT",
             )
         raise InvalidRequest(f"unknown system table {which}")
 

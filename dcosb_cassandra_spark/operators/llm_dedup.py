@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..session import bounded_memo_put, spread_width
+from ..memo import Memo
+from ..session import spread_width
 from ..functions.text import hash_split
 from ..functions.minhash import (
     DEFAULT_BANDS,
@@ -76,16 +77,15 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
 
 
 #: memoized candidate-pair PLAN fragments: (appId, id(input frame),
-#: fallback knob, spread width) → (input-frame ref, pairs frame). The
+#: fallback knobs, spread width) → (input-frame ref, pairs frame). The
 #: input is usually the catalog's memoized documents frame (same object
 #: per (app, sf_dir)), so the ~0.19 s of py4j expression construction for
 #: sigs+bands+join is paid once per corpus instead of per plan build
-#: (r14, guide §1.2 — the _QUERY_BATCH_DF_CACHE contract: a plan
-#: fragment, not a result; every action still recomputes from parquet).
-#: The held input ref keeps id() stable and the `is` check rejects id
-#: reuse after GC; the knob/width keys force a rebuild when
-#: test_dedup_semantics patches the fallback or the session conf moves.
-_LSH_CAND_CACHE: dict[tuple, tuple] = {}
+#: (r14). The frame's identity stands in for its generation: the held
+#: input ref keeps id() stable and the `is` check rejects id reuse after
+#: GC; the knob/width keys force a rebuild when test_dedup_semantics
+#: patches the fallback or the session conf moves.
+_LSH_CANDIDATES = Memo("lsh_candidates")
 
 
 def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
@@ -96,7 +96,7 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
     only in its FIRST colliding band (no DISTINCT), probe side spread by
     cores, build side broadcast while it fits (`maybe_broadcast`: the
     ~10⁷-doc shuffle-equi-join fallback is the size-conditional hint,
-    not prose). Memoized per corpus frame — see _LSH_CAND_CACHE."""
+    not prose). Memoized per corpus frame — see _LSH_CANDIDATES."""
     from ..functions.minhash import VOCAB_HASH_BROADCAST_BYTES
 
     key = (
@@ -106,9 +106,11 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
         VOCAB_HASH_BROADCAST_BYTES,  # r15: the sig stage's own hint knob
         spread_width(spark),
     )
-    hit = _LSH_CAND_CACHE.get(key)
-    if hit is not None and hit[0] is d:
-        return hit[1]
+    hit = _LSH_CANDIDATES.get(key)
+    if hit is not None:
+        if hit[0] is d:
+            return hit[1]
+        _LSH_CANDIDATES.evict(lambda k: k == key)  # a dead frame's id, reused
     sigs = minhash_signature(d, "doc_id", "text", DEFAULT_NUM_HASHES)
     bands = lsh_bands_keyed(sigs, "doc_id", DEFAULT_NUM_HASHES, DEFAULT_BANDS)
     probe = bands.repartition(spread_width(spark))
@@ -128,8 +130,7 @@ def lsh_candidate_pairs(spark: SparkSession, d: DataFrame) -> DataFrame:
         .filter(~dup_enum)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
     )
-    bounded_memo_put(_LSH_CAND_CACHE, key, (d, out))
-    return out
+    return _LSH_CANDIDATES.put(key, (d, out))[1]
 
 
 @query("d2_minhash_signatures", oracle=minhash_oracle_sql(), tags=("D2", "P1"))

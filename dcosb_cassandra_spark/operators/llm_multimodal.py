@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..catalog import table
+from ..memo import Memo, artifact_dir, corpus_gen
 from ..registry import query
 from ..sources.multimodal import DECODE_SCHEMA, decode_image_stub, multimodal_frame
 
@@ -1142,9 +1143,11 @@ def _decode_gif_aggregates(gifs_df: DataFrame) -> DataFrame:
     )
 
 
-#: (documents path, mtime) -> rendered-GIF store dir (the d8g durable-index
+#: corpus generation -> rendered-GIF store dir (the d8g durable-index
 #: convention applied to media payloads)
-_GIF_STORE_CACHE: dict = {}
+_GIF_STORES = Memo("gif_store", cap=None)
+#: the GIF artifact kind's build lock — separate from the IVF builder's,
+#: so concurrent d2h and d7m warm-ups build their artifacts in parallel
 _GIF_STORE_LOCK = __import__("threading").Lock()
 
 
@@ -1152,47 +1155,21 @@ def gif_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the rendered GIF payloads ONCE per corpus generation —
     the build/serve split for media: production tables STORE encoded
     bytes (the r8 verdict's framing), so the encode runs at ingest and
-    the serving path is decode-only. Durable under
-    SPARK_GRAFT_INDEX_DIR (atomic tmp+rename, losers discard only when
-    the winner's _SUCCESS exists — the r10 ivf rule) else a session
-    temp dir. Build/serve parity with the inline render+decode pass is
-    asserted by tests/test_gif_codec.py."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    the serving path is decode-only. Placed by `memo.artifact_dir`
+    (durable under SPARK_GRAFT_INDEX_DIR, else a session temp dir).
+    Build/serve parity with the inline render+decode pass is asserted by
+    tests/test_gif_codec.py."""
 
-    from ..sources.multimodal import multimodal_frame
+    def build(out: str) -> None:
+        multimodal_frame(spark, sf_dir).mapInPandas(
+            _render_gifs, schema="doc_id long, gif binary"
+        ).write.mode("overwrite").parquet(out)
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    mtime = os.stat(path).st_mtime_ns
-    key = (path, mtime)
+    gen = corpus_gen(sf_dir, "documents")
     with _GIF_STORE_LOCK:
-        if key not in _GIF_STORE_CACHE:
-            def build(out: str) -> None:
-                multimodal_frame(spark, sf_dir).mapInPandas(
-                    _render_gifs, schema="doc_id long, gif binary"
-                ).write.mode("overwrite").parquet(out)
-
-            root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-            if root:
-                tag = os.path.basename(os.path.normpath(sf_dir))
-                out = os.path.join(root, f"gifstore_{tag}_{mtime}")
-                if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                    tmp = f"{out}.build.{os.getpid()}"
-                    build(tmp)
-                    try:
-                        os.rename(tmp, out)
-                    except OSError:
-                        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                            raise
-                        shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                out = tempfile.mkdtemp(prefix="dcosb_gif_store_")
-                build(out)
-                atexit.register(shutil.rmtree, out, ignore_errors=True)
-            _GIF_STORE_CACHE[key] = out
-    return _GIF_STORE_CACHE[key]
+        return _GIF_STORES.get_or_build(
+            gen, lambda: artifact_dir("gifstore", sf_dir, gen[1], build)
+        )
 
 
 def d7m_render_inline(spark: SparkSession, sf_dir: str) -> DataFrame:

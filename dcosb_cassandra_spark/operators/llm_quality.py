@@ -32,12 +32,11 @@ al. 2024 (FineWeb-Edu classifier-scored curation)]
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..memo import Memo, corpus_gen
 from ..registry import query
 
 _QC_B = 8  # hashed char-trigram feature buckets
@@ -107,8 +106,8 @@ def _z_expr(w: list[int]) -> str:
     return f"({terms}) div 1000000L"
 
 
-#: (documents path, mtime, train_max) -> (weights, per-round losses)
-_QC_CACHE: dict[tuple, tuple[list, list]] = {}
+#: (corpus generation, train_max, erased ids) -> (weights, per-round losses)
+_QC_MODELS = Memo("quality_model")
 
 
 def _train_quality_classifier(
@@ -129,9 +128,8 @@ def _train_quality_classifier(
     an AGGREGATE artifact, so per-row erasure cannot reach it; the only
     honest guarantee is a retrain without the forgotten rows."""
     ids = tuple(sorted(int(i) for i in (exclude_doc_ids or ())))
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns, train_max, ids)
-    if key not in _QC_CACHE:
+
+    def build() -> tuple[list, list]:
         feats = _qc_features(table(spark, sf_dir, "documents")).filter(
             F.col("doc_id") < train_max
         )
@@ -162,8 +160,10 @@ def _train_quality_classifier(
                 w[j] - _tdiv(row[f"g{j}"], row["n"] * _QC_LR_DIV)
                 for j in range(_QC_NF)
             ]
-        _QC_CACHE[key] = (w, losses)
-    return _QC_CACHE[key]
+        return w, losses
+
+    key = (*corpus_gen(sf_dir, "documents"), train_max, ids)
+    return _QC_MODELS.get_or_build(key, build)
 
 
 def _qc_md5_byte_sql(arg: str) -> str:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table
+from ..memo import Memo, corpus_gen
 from ..registry import query
 
 
@@ -43,40 +44,31 @@ def _ws_token_count(c) -> F.Column:
     Used for dl/avgdl wherever the term list itself is not needed."""
     return F.length(c) - F.length(F.replace(c, F.lit(" "))) + F.lit(1)
 
-#: memoized RRF query-vector local relation: (appId, embeddings path,
-#: mtime) → the 5-row (qid, qe, qnrm) DataFrame d18b's vector arm probes
-#: with. The VALUES are already memoized (llm_similarity._query_batch);
-#: this memoizes the createDataFrame WRAP (~0.1-0.4 s of py4j/Arrow
-#: driver work per plan build) — the _QUERY_BATCH_DF_CACHE contract
-#: exactly (r15, judge r14 task #4): an immutable plan fragment, never a
-#: result; every action still recomputes from parquet.
-_RRF_QDF_CACHE: dict[tuple, DataFrame] = {}
+#: memoized RRF query-vector local relation: (appId, corpus generation) →
+#: the 5-row (qid, qe, qnrm) DataFrame d18b's vector arm probes with. The
+#: VALUES are already memoized (llm_similarity._query_batch); this
+#: memoizes the createDataFrame WRAP (~0.1-0.4 s of py4j/Arrow driver work
+#: per plan build, r15).
+_RRF_QDFS = Memo("rrf_query_df")
 
 
 def _rrf_query_df(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """The d18b query batch as an Arrow-backed local relation, memoized
     per (appId, corpus generation); None when the embeddings are empty."""
-    import os
+    import pandas as pd
 
-    from ..session import bounded_memo_put
     from .llm_similarity import _query_batch
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    cached = _RRF_QDF_CACHE.get(key)
-    if cached is not None:
-        return cached
     qid, qvecs, qnrms, _ranks = _query_batch(spark, sf_dir)
     if not qid:
         return None
-    import pandas as pd
-
-    qdf = spark.createDataFrame(
-        pd.DataFrame({"qid": qid, "qe": qvecs, "qnrm": qnrms}),
-        "qid long, qe array<double>, qnrm double",
+    return _RRF_QDFS.get_or_build(
+        (spark.sparkContext.applicationId, *corpus_gen(sf_dir, "embeddings")),
+        lambda: spark.createDataFrame(
+            pd.DataFrame({"qid": qid, "qe": qvecs, "qnrm": qnrms}),
+            "qid long, qe array<double>, qnrm double",
+        ),
     )
-    bounded_memo_put(_RRF_QDF_CACHE, key, qdf)
-    return qdf
 
 
 #: Okapi BM25 parameters (the Lucene/ES defaults — public constants).

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table
+from ..memo import Memo, corpus_gen
 from ..functions.text import (
     BPE_ISH_PATTERN,
     SENTIMENT_LEXICON,
@@ -1601,33 +1602,29 @@ def _doc_bigrams(src: DataFrame) -> DataFrame:
     )
 
 
-#: (documents path, mtime) → per-corpus bigram LM rows [(bg, q)] — the
-#: trained model, bounded at |V|² rows (charset², KBs even for CJK)
-_BIGRAM_MODEL_CACHE: dict[tuple, list] = {}
+#: corpus generation → per-corpus bigram LM rows [(bg, q)] — the trained
+#: model, bounded at |V|² rows (charset², KBs even for CJK)
+_BIGRAM_MODELS = Memo("bigram_model")
 
-#: (appId, documents path, mtime) → the literal lookup-map COLUMN built
-#: from the model. Building create_map(*2·|model| literals) costs one py4j
+#: (appId, corpus generation) → the literal lookup-map COLUMN built from
+#: the model. Building create_map(*2·|model| literals) costs one py4j
 #: round-trip per literal (~0.1-0.15 s per plan build for the sf0.1
-#: charset) — the column is an immutable expression fragment, so reuse is
-#: the catalog._table_memo contract (r14, guide §1.2: plan-build cost).
-_BIGRAM_MAP_COL_CACHE: dict[tuple, object] = {}
+#: charset, r14).
+_BIGRAM_MAP_COLS = Memo("bigram_map_col")
 
 
 def _bigram_model_map(spark: SparkSession, sf_dir: str, model: list):
     """The [(bg, q)] model as a literal create_map Column, memoized per
     (appId, corpus generation)."""
-    import os
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    if key not in _BIGRAM_MAP_COL_CACHE:
+    def build():
         args: list = []
         for bg, q in model:
             args += [F.lit(bg), F.lit(q)]
-        from ..session import bounded_memo_put
+        return F.create_map(*args)
 
-        bounded_memo_put(_BIGRAM_MAP_COL_CACHE, key, F.create_map(*args))
-    return _BIGRAM_MAP_COL_CACHE[key]
+    key = (spark.sparkContext.applicationId, *corpus_gen(sf_dir, "documents"))
+    return _BIGRAM_MAP_COLS.get_or_build(key, build)
 
 
 def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
@@ -1642,11 +1639,8 @@ def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
     column pruning de-canonicalizes the three model subtrees and the
     corpus explode executes three times per query (measured 3×). Returns
     the [(bg, q)] rows — the scorer folds them into its plan."""
-    import os
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns)
-    if key not in _BIGRAM_MODEL_CACHE:
+    def build() -> list:
         d = table(spark, sf_dir, "documents")
         bc = (
             _doc_bigrams(d)
@@ -1666,11 +1660,12 @@ def _bigram_model(spark: SparkSession, sf_dir: str) -> list:
         for r in d.filter(F.length("text") == 1).select("text").distinct().collect():
             chars.add(r["text"])
         v = len(chars)
-        _BIGRAM_MODEL_CACHE[key] = [
+        return [
             (r["bg"], (r["c"] + 1) * 1_000_000 // (pc[r["bg"][:1]] + v))
             for r in bc
         ]
-    return _BIGRAM_MODEL_CACHE[key]
+
+    return _BIGRAM_MODELS.get_or_build(corpus_gen(sf_dir, "documents"), build)
 
 
 @query(
@@ -1945,12 +1940,11 @@ def _bpe_merge_expr(left: str, right: str) -> str:
     )
 
 
-#: (documents path, mtime) → the trained merge table
+#: (corpus generation, rounds, erased ids) → the trained merge table
 #: [(round, left, right, merge_count, tokens_after)] — ONE training run
-#: per corpus generation (the _bigram_model/_codebook train-once memo):
-#: the graded training query, the encode pass, and the materialized-vocab
-#: build all reuse it.
-_BPE_TRAIN_CACHE: dict[tuple, list] = {}
+#: per corpus generation: the graded training query, the encode pass, and
+#: the materialized-vocab build all reuse it.
+_BPE_MERGES = Memo("bpe_merges")
 
 
 #: truncate the chained-rewrite lineage every this many training rounds:
@@ -1977,14 +1971,12 @@ def _train_bpe(
     existed — the erasure-audit rebuild path (maintenance.erasure_audit):
     a vocab is an AGGREGATE artifact every training doc's pair counts
     influenced, so the only honest erasure is a retrain without them."""
-    import os
-
     rounds = _BPE_ROUNDS if rounds is None else rounds
     ids = tuple(sorted(int(i) for i in (exclude_doc_ids or ())))
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, os.stat(path).st_mtime_ns, rounds, ids)
-    if key in _BPE_TRAIN_CACHE:
-        return _BPE_TRAIN_CACHE[key]
+    key = (*corpus_gen(sf_dir, "documents"), rounds, ids)
+    hit = _BPE_MERGES.get(key)
+    if hit is not None:
+        return hit
     docs = table(spark, sf_dir, "documents")
     if ids:
         docs = docs.filter(~F.col("doc_id").isin(list(ids)))
@@ -2014,8 +2006,7 @@ def _train_bpe(
         df = df.withColumn("seq", F.expr(_bpe_merge_expr(left, right)))
         if r % _BPE_CHAIN_BATCH == 0:
             df = df.localCheckpoint(eager=True)
-    _BPE_TRAIN_CACHE[key] = rows
-    return rows
+    return _BPE_MERGES.put(key, rows)
 
 
 _BPE_VOCAB_SCHEMA = (

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table
+from ..memo import Memo, corpus_gen, scratch_dir
 from ..registry import query
 from ..streaming.streams import await_stream
 
@@ -202,28 +203,28 @@ _DOCS_SCHEMA_FULL = (
 )
 
 _SINK_SEQ = [0]
-_STREAM_DIRS: dict = {}
+_STREAM_DIRS = Memo("stream_dirs", cap=None)
 
 
 def _stage_stream_dir(sf_dir: str, tbl: str) -> str:
     """The file stream source requires a *directory*; testdata ships one
     parquet file per table. Stage a temp dir holding a symlink to the file
-    (no copy — the data never moves), cached per (sf_dir, table)."""
+    (no copy — the data never moves, so a rewrite shows through), cached
+    per (sf_dir, table)."""
     import os
-    import tempfile
 
-    key = (sf_dir, tbl)
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix=f"stream_{tbl}_")
+    def build() -> str:
+        d = scratch_dir(f"stream_{tbl}_")
         os.symlink(
             os.path.join(sf_dir, f"{tbl}.parquet"),
             os.path.join(d, f"{tbl}.parquet"),
         )
-        _STREAM_DIRS[key] = d
-    return _STREAM_DIRS[key]
+        return d
+
+    return _STREAM_DIRS.get_or_build((sf_dir, tbl), build)
 
 
-_ORDERED_DIRS: dict = {}
+_ORDERED_DIRS = Memo("ordered_event_dirs", cap=None)
 
 
 def _stage_ordered_events_dir(
@@ -257,17 +258,13 @@ def _stage_ordered_events_dir(
     writes — this helper only exists because testdata ships one file."""
     import os
     import shutil
-    import tempfile
     import time
 
-    import atexit
-
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (src, os.stat(src).st_mtime_ns, n_chunks)
-    if key in _ORDERED_DIRS:
-        return _ORDERED_DIRS[key]
-    d = tempfile.mkdtemp(prefix="ordered_events_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    key = (*corpus_gen(sf_dir, "events"), n_chunks)
+    hit = _ORDERED_DIRS.get(key)
+    if hit is not None:
+        return hit
+    d = scratch_dir("ordered_events_")
     e = table(spark, sf_dir, "events")
     sel = e.select(
         "event_id",
@@ -314,8 +311,7 @@ def _stage_ordered_events_dir(
                 "value double, props string",
             )
         )
-    _ORDERED_DIRS[key] = d
-    return d
+    return _ORDERED_DIRS.put(key, d)
 
 
 def _sink_name(prefix: str) -> str:
@@ -986,35 +982,52 @@ if _tws_runnable():
         )
 
 
-_CHUNK_DIRS: dict = {}
+_CHUNK_DIRS = Memo("chunk_dirs", cap=None)
 
 
-def _stage_base_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage the BASE corpus (doc_id % 4 != 0 — the d2o convention) as
-    ``n_chunks`` doc_id-ordered parquet files, one per micro-batch: the
-    bounded replay of a daily-ingest document stream. Cached per
-    (sf_dir, n_chunks)."""
-    import tempfile
+def _stage_chunks(
+    sf_dir: str, tbl: str, cols: str, order: str, n_chunks: int, where: str = "true"
+) -> str:
+    """Stage ``tbl``'s rows matching ``where`` as ``n_chunks`` parquet files
+    ordered and ``ntile``-split on ``order`` — one file per micro-batch of
+    a bounded replay. DuckDB-only (no Spark job). Cached per corpus
+    generation and arguments, so a rewritten corpus is staged afresh."""
+    import os
 
     import duckdb
 
-    key = (sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_docchunks_")
+    def build() -> str:
+        d = scratch_dir(f"stream_{tbl}chunks_")
+        src = os.path.join(sf_dir, f"{tbl}.parquet")
         con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}') WHERE doc_id % 4 <> 0)
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+        try:
+            for i in range(n_chunks):
+                con.execute(
+                    f"""COPY (
+                          SELECT {cols}
+                          FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY {order}) AS nt
+                                FROM read_parquet('{src}') WHERE {where})
+                          WHERE nt = {i + 1} ORDER BY {order}
+                        ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
+                )
+        finally:
+            con.close()
+        return d
+
+    key = (*corpus_gen(sf_dir, tbl), cols, order, where, n_chunks)
+    return _CHUNK_DIRS.get_or_build(key, build)
+
+
+_DOC_COLS = "doc_id, text, lang, source, n_chars"
+
+
+def _stage_base_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
+    """The BASE corpus (doc_id % 4 != 0 — the d2o convention) staged as
+    ``n_chunks`` doc_id-ordered files: the bounded replay of a daily-ingest
+    document stream."""
+    return _stage_chunks(
+        sf_dir, "documents", _DOC_COLS, "doc_id", n_chunks, "doc_id % 4 <> 0"
+    )
 
 
 def _c14_oracle() -> str:
@@ -1102,30 +1115,9 @@ def c14_index_maintenance_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _stage_all_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
-    """The FULL corpus staged as ``n_chunks`` doc_id-ordered parquet
-    files (c15's ingest replay — unlike the base stager, no d2o base/
-    increment split). Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("all", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_alldocchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}'))
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    """The FULL corpus staged as ``n_chunks`` doc_id-ordered files (c15's
+    ingest replay — unlike the base stager, no d2o base/increment split)."""
+    return _stage_chunks(sf_dir, "documents", _DOC_COLS, "doc_id", n_chunks)
 
 
 def _c15_oracle() -> str:
@@ -1244,36 +1236,17 @@ def c16_stream_scoring_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_epoch_docs_chunks_dir(sf_dir: str, n_chunks: int = 4) -> str:
-    """c16b's staging: the corpus as ``n_chunks`` doc_id-ordered parquet
-    files, each row tagged with the model EPOCH that is live when it
-    arrives (chunks 1-2 → epoch 1, chunks 3-4 → epoch 2 — the model push
-    lands between micro-batches 2 and 3). Tagging rows at staging time
-    makes the replay deterministic under ANY file-arrival order: the
-    epoch a row is scored under is data, not an artifact of source file
-    ordering. Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("epoch", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_epochchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/documents.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT doc_id, text, lang, source, n_chars,
-                             CAST(CASE WHEN nt <= {n_chunks // 2} THEN 1
-                                       ELSE 2 END AS BIGINT) AS epoch
-                      FROM (SELECT *, ntile({n_chunks}) OVER (ORDER BY doc_id) AS nt
-                            FROM read_parquet('{src}'))
-                      WHERE nt = {i + 1} ORDER BY doc_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    """c16b's staging: the corpus as ``n_chunks`` doc_id-ordered files,
+    each row tagged with the model EPOCH that is live when it arrives
+    (chunks 1-2 → epoch 1, chunks 3-4 → epoch 2 — the model push lands
+    between micro-batches 2 and 3). Tagging rows at staging time makes
+    the replay deterministic under ANY file-arrival order: the epoch a
+    row is scored under is data, not an artifact of source file
+    ordering."""
+    epoch = f"CAST(CASE WHEN nt <= {n_chunks // 2} THEN 1 ELSE 2 END AS BIGINT) AS epoch"
+    return _stage_chunks(
+        sf_dir, "documents", f"{_DOC_COLS}, {epoch}", "doc_id", n_chunks
+    )
 
 
 _DOCS_SCHEMA_EPOCH = _DOCS_SCHEMA_FULL + ", epoch LONG"
@@ -1385,29 +1358,12 @@ def c16b_model_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_corpus_embeddings_chunks_dir(sf_dir: str, n_chunks: int = 3) -> str:
     """The CORPUS vectors (vec_id >= 5, the D4-family serving split)
-    staged as ``n_chunks`` vec_id-ordered parquet files — c17's vector
-    ingest replay. Cached per (sf_dir, n_chunks)."""
-    import tempfile
-
-    import duckdb
-
-    key = ("emb", sf_dir, n_chunks)
-    if key not in _CHUNK_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_embchunks_")
-        con = duckdb.connect()
-        src = f"{sf_dir}/embeddings.parquet"
-        for i in range(n_chunks):
-            con.execute(
-                f"""COPY (
-                      SELECT vec_id, embedding, label FROM (
-                          SELECT *, ntile({n_chunks}) OVER (ORDER BY vec_id) AS nt
-                          FROM read_parquet('{src}') WHERE vec_id >= 5)
-                      WHERE nt = {i + 1} ORDER BY vec_id
-                    ) TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-            )
-        con.close()
-        _CHUNK_DIRS[key] = d
-    return _CHUNK_DIRS[key]
+    staged as ``n_chunks`` vec_id-ordered files — c17's vector ingest
+    replay."""
+    return _stage_chunks(
+        sf_dir, "embeddings", "vec_id, embedding, label", "vec_id", n_chunks,
+        "vec_id >= 5",
+    )
 
 
 def _c17_oracle() -> str:

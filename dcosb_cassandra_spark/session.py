@@ -86,21 +86,6 @@ def ship_package(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def bounded_memo_put(cache: dict, key: tuple, value, cap: int = 8) -> None:
-    """Insert into a plan-fragment memo and drop the OLDEST entries past
-    ``cap`` (r15, judge r14 advice: the r14 memo caches keyed on
-    appId/mtime never re-hit stale generations, but also never freed
-    them — on a long-lived driver that regenerates corpora, the dead
-    DataFrames/Columns and their py4j objects accumulate forever). Keys
-    embed the generation (mtime/appId/frame identity), so eviction can
-    never serve a stale value — an evicted live entry just rebuilds on
-    next use. dict preserves insertion order, so FIFO == oldest
-    generation first."""
-    cache[key] = value
-    while len(cache) > cap:
-        cache.pop(next(iter(cache)))
-
-
 def spread_width(spark: SparkSession) -> int:
     """Partition count for pre-join round-robin spreads (the d2b/d2h
     pattern: the probe side arrives as one input split, so it is

@@ -19,6 +19,12 @@ os.environ["PYTHONPATH"] = (
     _VENDOR + (os.pathsep + os.environ["PYTHONPATH"] if os.environ.get("PYTHONPATH") else "")
 )
 
+#: the suite's one long-lived driver JVM: get_spark's 16g default heap is
+#: sized for sf0.1 benches, and on a 16 GB host the JVM grows into it and
+#: is killed by the kernel's OOM killer part-way through the suite; the
+#: sf0.01 suite fits well inside 8g
+os.environ.setdefault("SPARK_DRIVER_MEM", "8g")
+
 from dcosb_cassandra_spark.session import get_spark  # noqa: E402
 
 #: driver's correctness gate runs at sf0.01 — self-check at the same SF
@@ -46,7 +52,9 @@ def spark():
     yield s
 
 
-#: session-scoped memo of built query frames — see query_frame below
+#: session-scoped memo of built query frames — see query_frame below.
+#: Bounded by |REGISTRY| × the sf dirs the suite reads, so unlike the
+#: engine's per-corpus memos it needs no eviction.
 _FRAME_MEMO: dict = {}
 
 

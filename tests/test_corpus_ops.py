@@ -151,7 +151,7 @@ def test_bigram_model_collects_are_charset_bounded(spark, tmp_path, monkeypatch)
         return out
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    llm_text._BIGRAM_MODEL_CACHE.clear()
+    llm_text._BIGRAM_MODELS.clear()
     model = llm_text._bigram_model(spark, str(tmp_path))
     # charset = {a, b, x, ' '}: every training collect is model-sized
     # (bigram table ≤ 4² rows; charset probe ≤ 4 rows), never corpus-sized

@@ -1637,20 +1637,28 @@ def test_system_views_clients_tracks_principals(spark):
 def test_system_views_caches_reports_artifact_memos(sess):
     """system_views.caches: the memoized artifact registries with live
     entry counts — after a codebook-consuming query runs, the codebook
-    cache must show a warm entry."""
+    cache must show a warm entry, and a second run is a counted hit."""
     from dcosb_cassandra_spark.registry import load_all
 
     reg = load_all()
-    reg["d4b_centroid_assignment"].fn(sess.spark, SMOKE_SF_DIR).collect()
-    rows = {
-        r["name"]: r["entry_count"]
-        for r in sess.execute("SELECT * FROM system_views.caches").collect()
-    }
+
+    def caches() -> dict:
+        reg["d4b_centroid_assignment"].fn(sess.spark, SMOKE_SF_DIR).collect()
+        return {
+            r["name"]: r
+            for r in sess.execute("SELECT * FROM system_views.caches").collect()
+        }
+
+    rows = caches()
     assert {
         "bpe_merges", "codebook", "ivf_index_dirs", "ivf_index_ram",
         "knn_graph", "quality_model", "query_batch",
     } <= set(rows)
-    assert rows["codebook"] >= 1
+    cb = rows["codebook"]
+    assert cb["entry_count"] >= 1
+    assert cb["capacity"] >= cb["entry_count"]
+    assert cb["request_count"] >= cb["hit_count"]
+    assert caches()["codebook"]["hit_count"] > cb["hit_count"]
 
 
 def test_system_views_describe_and_errors(sess):

@@ -336,6 +336,38 @@ def test_forget_vectors_evicts_live_serving_caches(spark, tmp_path_factory):
     )
 
 
+def test_forgotten_vectors_stay_gone_past_other_generations(
+    spark, tmp_path_factory
+):
+    """The IVF dir memo holds the only copy of an erased index: after
+    forget_vectors, more corpus generations entering the memo must not
+    push the erased dir out, or the next probe rebuilds the index from
+    embeddings.parquet and serves the forgotten vec_id again."""
+    import shutil
+
+    from dcosb_cassandra_spark.operators.llm_similarity import (
+        _IVF_DIRS,
+        ivf_index,
+        ivf_index_dir,
+    )
+    from dcosb_cassandra_spark.sources.maintenance import forget_vectors
+
+    sf = str(tmp_path_factory.mktemp("sf_forget_gens"))
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", f"{sf}/embeddings.parquet")
+    vid = ivf_index(spark, sf).filter("vec_id >= 5").limit(1).collect()[0]["vec_id"]
+    forget_vectors(spark, ivf_index_dir(spark, sf), [vid])
+
+    others = [(f"/nonexistent/gen{i}/embeddings.parquet", i) for i in range(8)]
+    try:
+        for gen in others:
+            _IVF_DIRS.put(gen, f"/nonexistent/ivf3_gen{gen[1]}")
+        after = ivf_index(spark, sf)
+        assert after.filter(F.col("vec_id") == vid).count() == 0
+        assert after.count() > 0
+    finally:
+        _IVF_DIRS.evict(lambda k: k in others)
+
+
 def test_forget_swap_crash_recovery(spark, tmp_path_factory):
     """judge r10 ADVICE (low): the two-rename swap can crash with the
     store stranded as only '*.old.<pid>'. The next forget_* call must

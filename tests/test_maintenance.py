@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dcosb_cassandra_spark.catalog import table
@@ -197,13 +198,37 @@ def test_hot_key_warm_cache_removes_exchanges(spark):
         _table_memo.update(before)
 
 
-def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
+@pytest.fixture
+def forget_ivf_dir():
+    """``forget(sf_dir)`` drops sf_dir's memoized IVF index dir, as a fresh
+    process has none. Teardown puts back the dirs held before the test,
+    so later tests keep serving (and keying their RAM index and kNN graph
+    on) the same directory."""
+    from dcosb_cassandra_spark.memo import corpus_gen
+    from dcosb_cassandra_spark.operators.llm_similarity import _IVF_DIRS
+
+    held: dict = {}
+
+    def forget(sf_dir: str) -> None:
+        gen = corpus_gen(sf_dir, "embeddings")
+        held.setdefault(gen, _IVF_DIRS.get(gen))
+        _IVF_DIRS.evict(lambda k: k == gen)
+
+    yield forget
+    for gen, d in held.items():
+        _IVF_DIRS.evict(lambda k: k == gen)
+        if d is not None:
+            _IVF_DIRS.put(gen, d)
+
+
+def test_build_ivf_index_durable_and_served(
+    spark, tmp_path, monkeypatch, forget_ivf_dir
+):
     """build_ivf_index (r8): an explicit out_dir materializes the
     bucket-partitioned index there; the env-var policy builds a durable
     mtime-tagged dir under SPARK_GRAFT_INDEX_DIR and SKIPS the rebuild
     while the corpus generation is unchanged; and the served probe
     (d4d) over a fresh process-state reads the same rows either way."""
-    from dcosb_cassandra_spark.operators import llm_similarity
     from dcosb_cassandra_spark.sources.maintenance import build_ivf_index
 
     from .conftest import SF_DIR
@@ -221,11 +246,11 @@ def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
 
     # env-var durable policy: second call reuses, no rebuild
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index_root"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_ivf_dir(SF_DIR)
     d1 = build_ivf_index(spark, SF_DIR)
     assert d1.startswith(str(tmp_path / "index_root"))
     stamp = os.path.getmtime(os.path.join(d1, "_SUCCESS"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})  # new process
+    forget_ivf_dir(SF_DIR)  # new process
     d2 = build_ivf_index(spark, SF_DIR)
     assert d2 == d1
     assert os.path.getmtime(os.path.join(d1, "_SUCCESS")) == stamp  # untouched
@@ -240,7 +265,9 @@ def test_build_ivf_index_durable_and_served(spark, tmp_path, monkeypatch):
     assert len(rows) == 15  # 5 queries x top-3
 
 
-def test_ivf_rename_failure_propagates_unless_race_lost(spark, tmp_path, monkeypatch):
+def test_ivf_rename_failure_propagates_unless_race_lost(
+    spark, tmp_path, monkeypatch, forget_ivf_dir
+):
     """Judge r9 advice: the rename-race fallback must only swallow OSError
     when the durable name already holds a COMPLETE index (_SUCCESS) — a
     rename failing for any other reason (permissions, read-only fs) must
@@ -250,13 +277,12 @@ def test_ivf_rename_failure_propagates_unless_race_lost(spark, tmp_path, monkeyp
 
     import pytest
 
-    from dcosb_cassandra_spark.operators import llm_similarity
     from dcosb_cassandra_spark.sources.maintenance import build_ivf_index
 
     from .conftest import SMOKE_SF_DIR
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_root"))
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_ivf_dir(SMOKE_SF_DIR)
     real_rename = _os.rename
 
     def deny(src, dst):
@@ -269,11 +295,11 @@ def test_ivf_rename_failure_propagates_unless_race_lost(spark, tmp_path, monkeyp
     # lost race: the winner's complete index already sits at the durable
     # name -> the loser discards its build and serves the winner's
     monkeypatch.setattr(_os, "rename", real_rename)
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_ivf_dir(SMOKE_SF_DIR)
     winner = build_ivf_index(spark, SMOKE_SF_DIR)
     assert _os.path.exists(_os.path.join(winner, "_SUCCESS"))
     monkeypatch.setattr(_os, "rename", deny)
-    monkeypatch.setattr(llm_similarity, "_IVF_INDEX_CACHE", {})
+    forget_ivf_dir(SMOKE_SF_DIR)
     assert build_ivf_index(spark, SMOKE_SF_DIR) == winner  # no raise
 
 

@@ -92,13 +92,8 @@ def main() -> None:
         bits = sim.adaptive_lsh_bits(rows)
         bits2 = sim.adaptive_bucket_split_bits(rows)
         # cold build: clear every memo so the full pipeline runs
-        for key in list(sim._KNN_GRAPH_CACHE):
-            und, _ = sim._KNN_GRAPH_CACHE.pop(key)
-            try:
-                und.unpersist()
-            except Exception:
-                pass
-        sim._CODEBOOK_CACHE.clear()
+        sim._KNN_GRAPHS.clear()  # eviction unpersists the edges
+        sim._CODEBOOKS.clear()
         t0 = time.perf_counter()
         und, entries = sim.knn_graph(spark, sf_dir)
         edge_rows = und.count()
